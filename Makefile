@@ -3,13 +3,20 @@
 # No runtime deps to install in this container; targets are the
 # entry points a pipeline CI would call.
 
-.PHONY: install test check check-oracle bench smoke doctor catalog scale-data scale-probe
+.PHONY: install test perfbench-test check check-oracle bench smoke doctor catalog scale-data scale-probe
 
 install:
 	@echo "dependencies are preinstalled (pyspark, pyarrow, pandas, numpy, duckdb, pytest, hypothesis)"
 
+# The ROADMAP Tier-1 command, verbatim.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# The benchmark's own tests (generator, metric catalogue, smoke runs).
+# The traced index_maintenance smoke run wraps each state class's own
+# `refresh`, so it fails if one is no longer defined on its class.
+perfbench-test:
+	python3 -m pytest perfbench/tests -q
 
 # Emulates the driver's CORRECTNESS gate: first-50-query window.
 check:

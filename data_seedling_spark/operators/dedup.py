@@ -1316,8 +1316,9 @@ class MaterializedLshIndex:
     Every one-shot near-dup operator re-shingles, re-signs, and
     re-bands the ENTIRE corpus per run; at corpus scale you never do
     that. This class persists the band rows ``(id, band, bkey)`` as a
-    ledger-backed index table (the same exactly-once protocol as
-    ``operators.matview.MaterializedAggregate``: the applied source
+    ledger-backed index table (the exactly-once protocol every
+    CDC-maintained state table runs, ``operators.matview.refresh_state``,
+    in its row-mapped form ``refresh_mapped_index``: the applied source
     version rides inside the index commit as ``_source_hi``, so
     apply+advance are one atomic commit and a replayed refresh is a
     no-op) and each :meth:`refresh` shingles/signs/bands ONLY that
@@ -1397,17 +1398,9 @@ class MaterializedLshIndex:
         )
         return md5_band_rows(sig, self.id_col, self.num_perm, self.bands)
 
-    def applied_hi(self) -> int:
-        """Highest source version folded into the index — read from the
-        index itself (metadata-sized scalar), so apply+advance stay one
-        atomic commit."""
-        from .matview import mapped_index_applied_hi
-
-        return mapped_index_applied_hi(self.table)
-
     def refresh(self, source) -> tuple[int, int]:
-        """Fold ``source`` versions ``(applied_hi, latest]`` into the
-        index via the shared row-mapped-index protocol
+        """Fold ``source`` versions ``(stored watermark, latest]`` into
+        the index via the shared row-mapped-index protocol
         (``operators.matview.refresh_mapped_index``: O(increment)
         append for pure-insert increments, net-effect reduction +
         anti-join overwrite for removal-bearing ones). Cost: shingle +
@@ -1422,28 +1415,23 @@ class MaterializedLshIndex:
     def fold_batch(self, batch: DataFrame, batch_id: int) -> bool:
         """Fold one Structured-Streaming micro-batch of documents (pure
         inserts — append streams) into the index: the foreachBatch twin
-        of :meth:`refresh`, with the stream's ``batch_id`` as the
-        in-commit watermark (the standard idempotent-foreachBatch
-        guard — a batch replayed after a failure sees ``batch_id <=
-        applied_hi`` and no-ops instead of double-banding). Returns
-        False when the batch was already applied. Same pattern as
-        ``operators.matview.fold_stream_batch``."""
-        from .matview import SOURCE_HI, _marker_row
+        of :meth:`refresh` (``operators.matview.fold_batch_state``), with
+        the stream's ``batch_id`` as the in-commit watermark — a batch
+        replayed after a failure no-ops instead of double-banding. The
+        commit carries the same NULL-id watermark marker and, on a
+        tombstone-mode index, the same tombstone column as a refresh.
+        Returns False when the batch was already applied."""
+        from .matview import fold_batch_state
 
-        if batch_id <= self.applied_hi():
-            return False
-        rows = self.band_rows(
-            batch.select(self.id_col, self.text_col)
-        ).withColumn(SOURCE_HI, F.lit(batch_id).cast("long"))
-        # The same NULL-id watermark marker as refresh_mapped_index:
-        # a batch whose documents all band to zero rows still advances
-        # the stored watermark atomically (ADVICE r13).
-        rows = rows.unionByName(_marker_row(rows, self.id_col, batch_id))
-        if not self.table.exists():
-            self.table.write(rows, mode="overwrite")
-        else:
-            self.table.write(rows, mode="append")
-        return True
+        return fold_batch_state(
+            self.table,
+            batch.select(self.id_col, self.text_col),
+            batch_id,
+            lambda docs, _: self.band_rows(docs),
+            append=True,
+            id_col=self.id_col,
+            tombstones=self.deletes == "tombstone",
+        )
 
     def read(self) -> DataFrame:
         from .matview import read_mapped_index
@@ -1638,11 +1626,6 @@ class MaterializedNgramIndex:
             deletes=self.deletes,
             precomputed=precomputed_keys,
         )
-
-    def applied_hi(self) -> int:
-        from .matview import mapped_index_applied_hi
-
-        return mapped_index_applied_hi(self.table)
 
     def read(self) -> DataFrame:
         from .matview import read_mapped_index

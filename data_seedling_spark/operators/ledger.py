@@ -33,6 +33,7 @@ still sees a plain parquet scan with full pushdown/pruning.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -573,14 +574,10 @@ class VersionedTable:
         file. Values are stored JSON-native (numbers/strings;
         timestamps as ISO strings via ``str``), compared on read with
         the same coercion."""
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         stats: dict[str, dict[str, list]] = {}
-        for fpath in sorted(
-            _glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
-        ):
+        for fpath in _parquet_files(self._version_dir(version)):
             md = pq.ParquetFile(fpath).metadata
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
             per_col: dict[str, list] = {}
@@ -639,12 +636,9 @@ class VersionedTable:
             if equals and os.path.exists(bloom_path):
                 with open(bloom_path) as f:
                     blooms = json.load(f)
-            import glob as _glob
-
-            files = sorted(_glob.glob(os.path.join(vdir, "*.parquet")))
             kept = [
                 f
-                for f in files
+                for f in _parquet_files(vdir)
                 if _file_may_match(stats.get(os.path.basename(f)), ranges)
                 and _bloom_may_match(
                     blooms.get(os.path.basename(f)), equals or {}
@@ -677,14 +671,11 @@ class VersionedTable:
         positives at 10 bits/key). Bits serialize as base64 into a
         ``_bloom_index.json`` sidecar."""
         import base64
-        import glob as _glob
 
         import pyarrow.parquet as pq
 
         index: dict[str, dict] = {}
-        for fpath in sorted(
-            _glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
-        ):
+        for fpath in _parquet_files(self._version_dir(version)):
             pf = pq.ParquetFile(fpath)
             present = [c for c in columns if c in pf.schema_arrow.names]
             if not present:
@@ -928,15 +919,12 @@ class VersionedTable:
         watermarks (``_source_hi``), which ride in every commit and
         increase monotonically. Returns None when any row group's
         statistics are unusable (caller falls back to a scan)."""
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         commits = self.commits()
         if not commits:
             return None
-        d = self._commit_data_dir(commits[-1])
-        files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+        files = _parquet_files(self._commit_data_dir(commits[-1]))
         if not files:
             return None
         best = None
@@ -971,8 +959,6 @@ class VersionedTable:
         Exact: parquet footers record num_rows per file. Returns None
         when a live commit's directory has no parquet files to read
         (caller falls back to a count job)."""
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         commits = self.commits()
@@ -980,8 +966,7 @@ class VersionedTable:
             return None
         total = 0
         for c in self._live_versions(commits[-1].version):
-            d = self._commit_data_dir(c)
-            files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+            files = _parquet_files(self._commit_data_dir(c))
             if not files:
                 return None
             for fpath in files:
@@ -1278,6 +1263,11 @@ class VersionedTable:
         dest = self._branch_dir(name)
         if os.path.isdir(dest):
             shutil.rmtree(dest)
+
+
+def _parquet_files(d: str) -> list[str]:
+    """The parquet data files of one committed directory, sorted."""
+    return sorted(glob.glob(os.path.join(d, "*.parquet")))
 
 
 def _json_stat(v):

@@ -26,6 +26,16 @@ one commit; a replayed refresh re-reads ``max(_source_hi)`` and sees
 the range already applied. Plain row mirrors can rely on per-key merge
 idempotence; aggregate increments cannot, hence the marker.
 
+Every CDC-maintained state table in the engine runs this protocol
+through one function, :func:`refresh_state`: the aggregate here, the
+KLL / theta / count-min / t-digest sketches (``operators.sketch``)
+and, through its append-or-rewrite variant
+:func:`refresh_mapped_index`, the LSH, n-gram and IVF row-mapped
+indexes. A family supplies only its ``fold(changes, prior)``;
+:func:`fold_batch_state` is the same protocol keyed by a
+Structured-Streaming batch id, and :func:`commit_stamped` is the one
+place ``_source_hi`` is written.
+
 Scale posture: one refresh shuffles only ``O(|changes| + |touched
 groups|)`` rows on the group keys — the fact table is never rescanned.
 The delta aggregate gets map-side partial aggregation; the
@@ -45,6 +55,7 @@ from pyspark.sql import functions as F
 from .ledger import VersionedTable
 from .merge import (
     CHANGE_TYPE,
+    COMMIT_VERSION,
     CT_DELETE,
     CT_INSERT,
     CT_UPDATE_POST,
@@ -136,7 +147,8 @@ def apply_aggregate_delta(
 
 class MaterializedAggregate:
     """A versioned gold table holding ``GROUP BY group_keys`` sums,
-    refreshed incrementally from a versioned source's change feed."""
+    refreshed incrementally from a versioned source's change feed
+    through :func:`refresh_state`."""
 
     def __init__(
         self,
@@ -152,16 +164,22 @@ class MaterializedAggregate:
         self.sum_measures = dict(sum_measures)
         self.scale = scale
 
-    def applied_hi(self) -> int:
-        """Highest source version already folded into the view — read
-        from the view itself (metadata-sized scalar aggregate), so
-        apply+advance are one atomic commit."""
-        return stored_watermark(self.table)
+    def fold(self, changes: DataFrame, prior: DataFrame | None) -> DataFrame:
+        """``prior ⊕ delta(changes)``: touched groups are replaced,
+        vanished groups dropped. (A real Delta binding would use MERGE +
+        txn markers; the ledger's overwrite gives the same atomicity for
+        a view-sized table.)"""
+        delta = aggregate_delta(
+            changes, self.group_keys, self.sum_measures, self.scale
+        )
+        if prior is None:
+            return delta.where(F.col(COUNT_COL) > 0)
+        return apply_aggregate_delta(prior, delta, self.group_keys)
 
     def refresh(self, source: VersionedTable, transform=None) -> tuple[int, int]:
-        """Fold ``source`` versions ``(applied_hi, latest]`` into the
-        view. Returns the ``(lo, hi)`` range applied (lo > hi means the
-        view was already current — the replay no-op path).
+        """Fold ``source`` versions ``(stored watermark, latest]`` into
+        the view. Returns the ``(lo, hi)`` range applied (lo > hi means
+        the view was already current — the replay no-op path).
 
         ``transform`` (optional) maps the raw change feed before the
         delta aggregate — the *join-view maintenance* seam: a fact-CDC
@@ -174,47 +192,33 @@ class MaterializedAggregate:
         dimension needs bitemporal deltas — out of scope, recompute).
         Reserved CDC columns must survive the transform (they do for
         joins/projections that keep them)."""
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        if transform is not None:
-            changes = transform(changes)
-        delta = aggregate_delta(
-            changes, self.group_keys, self.sum_measures, self.scale
+        return refresh_state(
+            self.table,
+            source,
+            lambda changes, prior: self.fold(
+                changes if transform is None else transform(changes), prior
+            ),
         )
-        if not self.table.exists():
-            first = delta.where(F.col(COUNT_COL) > 0).withColumn(
-                SOURCE_HI, F.lit(hi).cast("long")
-            )
-            self.table.write(first, mode="overwrite")
-            return lo, hi
-        old = self.table.read()
-        new_state = apply_aggregate_delta(
-            old.drop(SOURCE_HI), delta, self.group_keys
-        ).withColumn(SOURCE_HI, F.lit(hi).cast("long"))
-        # Touched groups are replaced, vanished groups dropped — the
-        # overwrite commit is the atomic apply+advance. (A real Delta
-        # binding would use MERGE + txn markers; the ledger's overwrite
-        # gives the same atomicity for a view-sized table.)
-        self.table.write(new_state, mode="overwrite")
-        return lo, hi
 
 
 def stored_watermark(table: VersionedTable) -> int:
     """``max(_source_hi)`` of a protocol state table, -1 when absent.
 
     Every protocol commit stamps ALL its rows (markers included) with
-    the just-applied ``hi``, and ``hi`` increases monotonically — so
-    the table-wide max always lives in the LAST commit, and the parquet
-    row-group statistics of that commit's files answer it without a
-    Spark job (``VersionedTable.column_max_footer`` — the same
-    metadata-only read Delta does against its checkpoint; guide §5:
-    driver round-trips). Falls back to the scan+collect when footer
-    stats are unusable. The semantics are unchanged: the watermark is
-    still read from the committed table itself, so apply+advance stay
-    one atomic commit and a fresh process recovers it from storage."""
+    the just-applied ``hi`` (:func:`commit_stamped`), and ``hi``
+    increases monotonically — so the table-wide max always lives in
+    the LAST commit, and the parquet row-group statistics of that
+    commit's files answer it without a Spark job
+    (``VersionedTable.column_max_footer`` — the same metadata-only
+    read Delta does against its checkpoint; guide §5: driver
+    round-trips). Falls back to the scan+collect when footer stats are
+    unusable. The watermark is read from the committed table itself,
+    so apply+advance stay one atomic commit and a fresh process
+    recovers it from storage. For a row-mapped index the watermark
+    MARKER rows (id NULL — see :func:`_marker_row`) count here by
+    design: they keep this scalar equal to the ``hi`` the last refresh
+    returned even when that refresh mapped to zero index rows
+    (ADVICE r13)."""
     if not table.exists():
         return -1
     hi = table.column_max_footer(SOURCE_HI)
@@ -224,26 +228,135 @@ def stored_watermark(table: VersionedTable) -> int:
     return -1 if row["hi"] is None else int(row["hi"])
 
 
-def mapped_index_applied_hi(table: VersionedTable) -> int:
-    """Highest source version folded into a row-mapped index — read
-    from the index itself (metadata-sized scalar aggregate), so
-    apply+advance stay one atomic commit. -1 for a not-yet-built
-    index. Watermark MARKER rows (id NULL — see
-    :func:`refresh_mapped_index`) count here by design: they exist so
-    this scalar always equals the ``hi`` the last refresh returned,
-    even when that refresh mapped to zero index rows (ADVICE r13)."""
-    return stored_watermark(table)
+def commit_stamped(
+    table: VersionedTable,
+    rows: DataFrame,
+    hi: int,
+    append: bool = False,
+    id_col: str | None = None,
+    tombstones: bool = False,
+) -> int:
+    """Commit ``rows`` stamped with ``_source_hi = hi`` — the one place
+    the in-commit watermark is written, so apply and advance are a
+    single ledger commit. Overwrites unless ``append`` (which still
+    creates a missing table). A row-mapped index passes ``id_col``, so
+    the commit also carries the NULL-id watermark marker row
+    (:func:`_marker_row`), and ``tombstones`` when it keeps the
+    tombstone column (rows without one are live: ``_tomb = false``).
+    Returns the committed version."""
+    if tombstones and TOMBSTONE not in rows.columns:
+        rows = rows.withColumn(TOMBSTONE, F.lit(False))
+    rows = rows.withColumn(SOURCE_HI, F.lit(hi).cast("long"))
+    if id_col is not None:
+        rows = rows.unionByName(_marker_row(rows, id_col, hi))
+    return table.write(
+        rows, mode="append" if append and table.exists() else "overwrite"
+    )
+
+
+def _pending_changes(
+    table: VersionedTable,
+    source,
+    accept: Sequence[str] | None = None,
+    owner: str = "",
+):
+    """The read half of the protocol: ``(lo, hi, changes,
+    insert_only)`` with ``lo = stored watermark + 1`` and ``hi`` the
+    source's latest version; ``changes`` is None when ``lo > hi`` (the
+    table is current). ``insert_only`` is the source's metadata answer
+    (``VersionedTable.changes_insert_only``: True, False, or None when
+    only the rows can tell). With ``accept`` set, the change-type guard
+    probes the feed for any other type and raises — except when the
+    metadata already proves the range insert-only (append commits
+    surface only inserts), so append-only refreshes run no probe job."""
+    lo = stored_watermark(table) + 1
+    hi = source.latest_version()
+    if lo > hi:
+        return lo, hi, None, None
+    changes = source.read_changes(lo, hi)
+    probe = getattr(source, "changes_insert_only", None)
+    insert_only = None if probe is None else probe(lo, hi)
+    if accept is not None and insert_only is not True:
+        bad = changes.where(~F.col(CHANGE_TYPE).isin(*accept))
+        if bad.limit(1).count() > 0:
+            found = sorted(
+                r[0] for r in bad.select(CHANGE_TYPE).distinct().collect()
+            )
+            raise ValueError(
+                f"{owner}: unsupported change types in feed: {found} "
+                f"(accepted: {list(accept)})"
+            )
+    return lo, hi, changes, insert_only
+
+
+def refresh_state(
+    table: VersionedTable,
+    source,
+    fold,
+    accept: Sequence[str] | None = None,
+    owner: str = "",
+) -> tuple[int, int]:
+    """The exactly-once refresh of a CDC-maintained state table (see
+    the module docstring): fold ``source`` versions ``(stored
+    watermark, latest]`` into ``table`` and return the applied ``(lo,
+    hi)`` — ``lo > hi`` when the table was already current, the replay
+    no-op path.
+
+    ``fold(changes, prior)`` is the family's algebra: it maps the
+    range's change feed and the stored state (``None`` before the
+    first commit; the ``_source_hi`` column dropped) to the new state,
+    which :func:`commit_stamped` overwrites stamped with ``hi``.
+    ``accept`` lists the change types the fold is defined for (None:
+    every type); see :func:`_pending_changes` for the guard, whose
+    error names ``owner``."""
+    lo, hi, changes, _ = _pending_changes(table, source, accept, owner)
+    if changes is not None:
+        prior = table.read().drop(SOURCE_HI) if table.exists() else None
+        commit_stamped(table, fold(changes, prior), hi)
+    return lo, hi
+
+
+def fold_batch_state(
+    table: VersionedTable,
+    batch: DataFrame,
+    batch_id: int,
+    fold,
+    append: bool = False,
+    id_col: str | None = None,
+    tombstones: bool = False,
+) -> bool:
+    """The batch-id twin of :func:`refresh_state` for Structured
+    Streaming ``foreachBatch`` sinks: the stream's ``batch_id`` is the
+    in-commit watermark (the standard idempotent-foreachBatch guard —
+    a batch replayed after a failure sees ``batch_id <=`` the stored
+    watermark and no-ops instead of double-applying). ``fold(batch,
+    prior)`` gives the rows to commit; with ``append`` they are
+    appended and ``prior`` is None (the stored state is never read),
+    otherwise they replace the state. ``id_col``/``tombstones`` select
+    the row-mapped-index stamp (:func:`commit_stamped`). Returns False
+    when the batch was already applied."""
+    if batch_id <= stored_watermark(table):
+        return False
+    prior = (
+        table.read().drop(SOURCE_HI) if table.exists() and not append else None
+    )
+    commit_stamped(
+        table, fold(batch, prior), batch_id, append=append, id_col=id_col,
+        tombstones=tombstones,
+    )
+    return True
 
 
 def _marker_row(template: DataFrame, id_col: str, hi: int) -> DataFrame:
     """One watermark marker row in ``template``'s schema: every data
     column NULL (``id_col`` included; the tombstone flag, when present,
     is true so BOTH read filters drop it), ``_source_hi = hi``. Unioned
-    into every index commit so ``mapped_index_applied_hi`` always
-    advances with the returned ``hi`` — a refresh whose increment maps
-    to zero index rows (all-empty-shingle docs; an empty change feed
-    over ledger versions that committed no rows) previously left the
-    stored watermark behind its return value (ADVICE r13). Readers go
+    into every index commit by :func:`commit_stamped` so
+    :func:`stored_watermark` always advances with the returned ``hi``
+    — a refresh whose increment maps to zero index rows
+    (all-empty-shingle docs; an empty change feed over ledger versions
+    that committed no rows) previously left the stored watermark
+    behind its return value (ADVICE r13). Readers go
     through :func:`read_mapped_index`, which drops NULL-id rows."""
     spark = template.sparkSession
     cols = []
@@ -303,7 +416,7 @@ def compact_mapped_index(
     fraction of raw rows is invisible (tombstones, superseded
     generations, markers) — the caller's threshold knob. Returns
     whether a rewrite happened."""
-    hi = mapped_index_applied_hi(table)
+    hi = stored_watermark(table)
     if hi < 0:
         return False
     resolved = read_mapped_index(table, id_col).drop(SOURCE_HI)
@@ -319,11 +432,9 @@ def compact_mapped_index(
             live = resolved.count()
             if raw == 0 or (raw - live) / raw < min_stale_fraction:
                 return False
-        out = resolved.withColumn(TOMBSTONE, F.lit(False)).withColumn(
-            SOURCE_HI, F.lit(hi).cast("long")
+        version = commit_stamped(
+            table, resolved, hi, id_col=id_col, tombstones=True
         )
-        out = out.unionByName(_marker_row(out, id_col, hi))
-        version = table.write(out, mode="overwrite")
         # Tag AFTER the commit: a crash in between just costs readers
         # the window until the next compaction (see COMPACTED_TAG).
         table.set_tag(COMPACTED_TAG, version)
@@ -350,10 +461,13 @@ def refresh_mapped_index(
     live corpus, row for row, under any commit split — the hash-proof
     the consumers' oracles rely on.
 
-    Folds ``source`` versions ``(applied_hi, latest]`` into ``table``;
-    returns the applied ``(lo, hi)`` (lo > hi = already current, the
-    replay no-op path). Pure-insert increments take the O(increment)
-    append path. Removal-bearing increments (deletes / update
+    Folds ``source`` versions ``(stored watermark, latest]`` into
+    ``table``; returns the applied ``(lo, hi)`` (lo > hi = already
+    current, the replay no-op path). It is :func:`refresh_state` with
+    an append-or-rewrite commit instead of a state overwrite: the same
+    read half (:func:`_pending_changes`) and the same stamp
+    (:func:`commit_stamped`). Pure-insert increments take the
+    O(increment) append path. Removal-bearing increments (deletes / update
     preimages) reduce the feed to each id's NET EFFECT — its last
     change by ``_commit_version``, insert-like outranking remove-like
     within one version, the ``merge.apply_change_feed`` reduction —
@@ -376,8 +490,8 @@ def refresh_mapped_index(
       — the tombstone is what hides it.
 
     The applied version rides inside the index commit as
-    ``_source_hi`` (exactly-once, same marker as
-    :class:`MaterializedAggregate`), and every commit carries one
+    ``_source_hi`` (exactly-once, the marker every state table
+    carries), and every commit carries one
     NULL-id watermark marker row (:func:`_marker_row`) so the stored
     watermark always advances with the returned ``hi`` — including
     increments that map to zero index rows (ADVICE r13). Consumers
@@ -399,38 +513,26 @@ def refresh_mapped_index(
     if deletes not in ("rewrite", "tombstone"):
         raise ValueError(f"unsupported deletes mode {deletes!r}")
     tomb = deletes == "tombstone"
-    lo = mapped_index_applied_hi(table) + 1
-    hi = source.latest_version()
-    if lo > hi:
+    lo, hi, changes, ins_only = _pending_changes(table, source)
+    if changes is None:
         return lo, hi
 
-    def _stamp(rows: DataFrame, tombstone_col=None) -> DataFrame:
-        if tomb:
-            rows = rows.withColumn(
-                TOMBSTONE,
-                F.lit(False) if tombstone_col is None else tombstone_col,
-            )
-        rows = rows.withColumn(SOURCE_HI, F.lit(hi).cast("long"))
-        return rows.unionByName(_marker_row(rows, id_col, hi))
+    def commit(rows: DataFrame, append: bool = False) -> None:
+        commit_stamped(
+            table, rows, hi, append=append, id_col=id_col, tombstones=tomb
+        )
 
-    changes = source.read_changes(lo, hi)
     insert_like = F.col(CHANGE_TYPE).isin([CT_INSERT, CT_UPDATE_POST])
     remove_like = F.col(CHANGE_TYPE).isin([CT_DELETE, CT_UPDATE_PRE])
     cols = [id_col, *input_cols]
     # commit modes often decide insert-only without a probe job
-    ins_only = source.changes_insert_only(lo, hi)
     if ins_only is None:
         ins_only = changes.where(remove_like).isEmpty()
     if ins_only:
-        if precomputed is not None:
-            new_rows = _stamp(precomputed)
-        else:
-            ins = changes.where(insert_like).select(*cols)
-            new_rows = _stamp(row_fn(ins))
-        table.write(new_rows, mode="append" if table.exists() else "overwrite")
+        if precomputed is None:
+            precomputed = row_fn(changes.where(insert_like).select(*cols))
+        commit(precomputed, append=True)
         return lo, hi
-    from .merge import COMMIT_VERSION
-
     version = (
         F.col(COMMIT_VERSION)
         if COMMIT_VERSION in changes.columns
@@ -456,13 +558,12 @@ def refresh_mapped_index(
                 tombstones = tombstones.withColumn(
                     c, F.lit(None).cast(new_rows.schema[c].dataType)
                 )
-        out = _stamp(
-            tombstones.select(*new_rows.columns).withColumn(
-                "_is_tomb", F.lit(True)
-            ).unionByName(new_rows.withColumn("_is_tomb", F.lit(False))),
-            tombstone_col=F.col("_is_tomb"),
-        ).drop("_is_tomb")
-        table.write(out, mode="append")
+        commit(
+            tombstones.select(*new_rows.columns)
+            .withColumn(TOMBSTONE, F.lit(True))
+            .unionByName(new_rows.withColumn(TOMBSTONE, F.lit(False))),
+            append=True,
+        )
         return lo, hi
     if table.exists():
         kept = (
@@ -472,7 +573,7 @@ def refresh_mapped_index(
             .join(changed_ids, id_col, "left_anti")
         )
         new_rows = kept.unionByName(new_rows)
-    table.write(_stamp(new_rows), mode="overwrite")
+    commit(new_rows)
     return lo, hi
 
 
@@ -480,31 +581,15 @@ def fold_stream_batch(
     view: MaterializedAggregate, batch: DataFrame, batch_id: int
 ) -> bool:
     """Fold one Structured-Streaming micro-batch into the view — the
-    foreachBatch twin of :meth:`MaterializedAggregate.refresh`, with
-    the stream's ``batch_id`` as the in-commit watermark (the standard
-    idempotent-foreachBatch guard: a batch replayed after a failure
-    sees ``batch_id <= applied_hi`` and no-ops instead of
-    double-counting). Batches without a change-type column are treated
-    as pure inserts (append streams); CDC streams pass their own
-    change types through. Returns False when the batch was already
+    foreachBatch twin of :meth:`MaterializedAggregate.refresh`, through
+    :func:`fold_batch_state` with the stream's ``batch_id`` as the
+    in-commit watermark. Batches without a change-type column are
+    treated as pure inserts (append streams); CDC streams pass their
+    own change types through. Returns False when the batch was already
     applied."""
-    if batch_id <= view.applied_hi():
-        return False
     if CHANGE_TYPE not in batch.columns:
         batch = batch.withColumn(CHANGE_TYPE, F.lit(CT_INSERT))
-    delta = aggregate_delta(batch, view.group_keys, view.sum_measures, view.scale)
-    if not view.table.exists():
-        first = delta.where(F.col(COUNT_COL) > 0).withColumn(
-            SOURCE_HI, F.lit(batch_id).cast("long")
-        )
-        view.table.write(first, mode="overwrite")
-        return True
-    old = view.table.read()
-    new_state = apply_aggregate_delta(
-        old.drop(SOURCE_HI), delta, view.group_keys
-    ).withColumn(SOURCE_HI, F.lit(batch_id).cast("long"))
-    view.table.write(new_state, mode="overwrite")
-    return True
+    return fold_batch_state(view.table, batch, batch_id, view.fold)
 
 
 def stream_aggregate_into(

@@ -556,17 +556,12 @@ class MaterializedIvfIndex:
             arrow=self.arrow,
         )
 
-    def applied_hi(self) -> int:
-        from .matview import mapped_index_applied_hi
-
-        return mapped_index_applied_hi(self.table)
-
-    def refresh(self, source, deletes: str = "rewrite") -> tuple[int, int]:
+    def refresh(self, source) -> tuple[int, int]:
         from .matview import refresh_mapped_index
 
         return refresh_mapped_index(
             self.table, source, self.id_col, [self.vec_col],
-            self.assign_rows, deletes=deletes,
+            self.assign_rows,
         )
 
     def read(self) -> DataFrame:

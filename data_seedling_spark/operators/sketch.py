@@ -30,9 +30,9 @@ Rank error: level-``l`` compaction perturbs any rank query by at most
 asserted in ``tests/test_sketch.py``.
 
 Reference scope: the reference engine ships no sketch operator
-(SURVEY §2 gap list / docs/ROADMAP.md:427-431); this is the
-training-pipeline extension (percentile feeds for quality filtering at
-100 TB, where exact global sort is off the table).
+(SURVEY §2 gap list); this is the training-pipeline extension
+(percentile feeds for quality filtering at 100 TB, where exact global
+sort is off the table).
 """
 
 from __future__ import annotations
@@ -43,6 +43,15 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from .matview import refresh_state
+from .merge import (
+    CHANGE_TYPE,
+    CT_DELETE,
+    CT_INSERT,
+    CT_UPDATE_POST,
+    CT_UPDATE_PRE,
+)
 
 
 def _md5_long(col):
@@ -296,8 +305,9 @@ class MaterializedSketch:
     (streaming/decayed percentile feeds without ever rescanning the
     fact table).
 
-    Protocol mirrors :class:`operators.matview.MaterializedAggregate`:
-    the applied source version rides *inside* the sketch commit as
+    Protocol: :func:`operators.matview.refresh_state`, the one
+    exactly-once fold every CDC-maintained state table runs — the
+    applied source version rides *inside* the sketch commit as
     ``_source_hi``, so apply+advance are one atomic write and a
     replayed refresh is a no-op. Each refresh sketches ONLY the
     increment (``inc_rounds`` compactions over O(changes) rows), then
@@ -315,8 +325,6 @@ class MaterializedSketch:
     replay create/append/merge commit-by-commit and hash-match the
     quantile estimates exactly.
     """
-
-    SOURCE_HI = "_source_hi"
 
     def __init__(
         self,
@@ -336,44 +344,22 @@ class MaterializedSketch:
         self.merge_rounds = merge_rounds
         self.bucket_width = bucket_width
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
     def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import CHANGE_TYPE, CT_INSERT
+        """Fold source versions ``(stored watermark, latest]``; returns
+        the applied ``(lo, hi)`` (lo > hi = already current)."""
 
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # ledger commit modes usually prove insert-only without a
-        # probe job (append commits emit only CT_INSERT rows)
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
-        )
-        if _ins_only is not True and (
-            changes.where(F.col(CHANGE_TYPE) != CT_INSERT).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "MaterializedSketch is insert-only: rank sketches have "
-                "no delete inverse — recompute instead"
+        def fold(changes, prior):
+            inc = kll_sketch(
+                changes,
+                self.value_col,
+                self.id_col,
+                rounds=self.inc_rounds,
+                bucket_width=self.bucket_width,
             )
-        inc = kll_sketch(
-            changes,
-            self.value_col,
-            self.id_col,
-            rounds=self.inc_rounds,
-            bucket_width=self.bucket_width,
-        )
-        if self.table.exists():
+            if prior is None:
+                return inc
             merged = kll_bucketed(
-                self.table.read().select("v", "id", "w").unionByName(inc),
+                prior.select("v", "id", "w").unionByName(inc),
                 "v",
                 self.bucket_width,
             )
@@ -384,14 +370,13 @@ class MaterializedSketch:
                         merged, "v", "id", "w",
                         bucket_width=self.bucket_width,
                     ).localCheckpoint()
-            state = merged.drop("_rb")
-        else:
-            state = inc
-        self.table.write(
-            state.withColumn(self.SOURCE_HI, F.lit(hi).cast("long")),
-            mode="overwrite",
+            return merged.drop("_rb")
+
+        return refresh_state(
+            self.table, source, fold, accept=[CT_INSERT],
+            owner="MaterializedSketch is insert-only (rank sketches have "
+            "no delete inverse; recompute instead)",
         )
-        return lo, hi
 
     def quantiles(self, probs: list[float]) -> DataFrame:
         return kll_quantiles(
@@ -659,14 +644,12 @@ class MaterializedThetaSketch:
     protocol against one plain full-corpus SQL sketch (no unrolled
     replay needed, unlike KLL's round-by-round coin schedule).
 
-    Protocol mirrors ``MaterializedSketch``: the applied source
-    version rides inside the sketch commit as ``_source_hi`` so
+    Protocol: :func:`operators.matview.refresh_state` — the applied
+    source version rides inside the sketch commit as ``_source_hi`` so
     apply+advance are atomic and a replayed refresh is a no-op.
     Insert-only (theta sketches have no delete inverse); a
     delete/update in the feed raises and the caller recomputes.
     Refresh cost is O(|increment|) + a k-row merge."""
-
-    SOURCE_HI = "_source_hi"
 
     def __init__(self, spark, table, key_col: str, k: int = 64):
         self.spark = spark
@@ -674,46 +657,21 @@ class MaterializedThetaSketch:
         self.key_col = key_col
         self.k = k
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
     def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import CHANGE_TYPE, CT_INSERT
+        """Fold source versions ``(stored watermark, latest]``; returns
+        the applied ``(lo, hi)`` (lo > hi = already current)."""
 
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # ledger commit modes usually prove insert-only without a
-        # probe job (append commits emit only CT_INSERT rows)
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
+        def fold(changes, prior):
+            inc = theta_sketch(changes, self.key_col, self.k)
+            if prior is None:
+                return inc
+            return theta_union(prior.select("h"), inc, k=self.k)
+
+        return refresh_state(
+            self.table, source, fold, accept=[CT_INSERT],
+            owner="MaterializedThetaSketch is insert-only (KMV retention "
+            "has no delete inverse; recompute instead)",
         )
-        if _ins_only is not True and (
-            changes.where(F.col(CHANGE_TYPE) != CT_INSERT).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "MaterializedThetaSketch is insert-only: KMV retention "
-                "has no delete inverse — recompute instead"
-            )
-        inc = theta_sketch(changes, self.key_col, self.k)
-        if self.table.exists():
-            state = theta_union(
-                self.table.read().select("h"), inc, k=self.k
-            )
-        else:
-            state = inc
-        self.table.write(
-            state.withColumn(self.SOURCE_HI, F.lit(hi).cast("long")),
-            mode="overwrite",
-        )
-        return lo, hi
 
     def stats(self) -> DataFrame:
         return theta_stats(self.table.read().select("h"), self.k)
@@ -734,8 +692,6 @@ class MaterializedCountMin:
     (``md5(d ':' key)``), the same grid ``count_min_estimates``
     builds. Refresh cost is O(|changes| × depth) fixed-width rows plus
     a (d × width)-bounded merge."""
-
-    SOURCE_HI = "_source_hi"
 
     def __init__(self, spark, table, key_col: str, depth: int = 4, width: int = 256):
         self.spark = spark
@@ -780,73 +736,34 @@ class MaterializedCountMin:
             .agg(F.sum("_s").alias("c"))
         )
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
     def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import (
-            CHANGE_TYPE,
-            CT_DELETE,
-            CT_INSERT,
-            CT_UPDATE_POST,
-            CT_UPDATE_PRE,
-        )
+        """Fold source versions ``(stored watermark, latest]``; returns
+        the applied ``(lo, hi)`` (lo > hi = already current). A change
+        type outside the four CDC kinds raises: it would map to a NULL
+        sign that ``F.sum`` silently drops (r8 ADVICE)."""
 
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # A NULL sign would be dropped by F.sum and silently corrupt
-        # the maintained counters — fail loudly on change types outside
-        # the four CDC kinds instead, matching the KLL/theta
-        # maintainers' contract (r8 ADVICE).
-        known = (CT_INSERT, CT_UPDATE_POST, CT_DELETE, CT_UPDATE_PRE)
-        # append-only ranges provably carry CT_INSERT rows alone —
-        # the unknown-type probe job is needed only for data-dependent
-        # (merge/update/overwrite) feeds
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
-        )
-        unknown = changes.where(~F.col(CHANGE_TYPE).isin(*known))
-        if _ins_only is not True and unknown.limit(1).count() > 0:
-            bad = sorted(
-                r[0]
-                for r in unknown.select(CHANGE_TYPE).distinct().collect()
+        def fold(changes, prior):
+            ct = F.col(CHANGE_TYPE)
+            sign = F.when(ct.isin(CT_INSERT, CT_UPDATE_POST), F.lit(1)).when(
+                ct.isin(CT_DELETE, CT_UPDATE_PRE), F.lit(-1)
             )
-            raise ValueError(
-                "MaterializedCountMin.refresh: unsupported change types "
-                f"in feed: {bad} (known: {list(known)})"
+            state = self._bucketed(
+                changes.withColumn("_sgn", sign), F.col("_sgn")
             )
-        sign = (
-            F.when(F.col(CHANGE_TYPE).isin(CT_INSERT, CT_UPDATE_POST), F.lit(1))
-            .when(F.col(CHANGE_TYPE).isin(CT_DELETE, CT_UPDATE_PRE), F.lit(-1))
+            if prior is not None:
+                state = (
+                    prior.select("d", "bucket", "c")
+                    .unionByName(state)
+                    .groupBy("d", "bucket")
+                    .agg(F.sum("c").alias("c"))
+                )
+            return state.where(F.col("c") != 0)
+
+        return refresh_state(
+            self.table, source, fold,
+            accept=[CT_INSERT, CT_UPDATE_POST, CT_DELETE, CT_UPDATE_PRE],
+            owner="MaterializedCountMin.refresh",
         )
-        delta = self._bucketed(
-            changes.withColumn("_sgn", sign), F.col("_sgn")
-        )
-        if self.table.exists():
-            state = (
-                self.table.read()
-                .select("d", "bucket", "c")
-                .unionByName(delta)
-                .groupBy("d", "bucket")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            state = delta
-        self.table.write(
-            state.where(F.col("c") != 0).withColumn(
-                self.SOURCE_HI, F.lit(hi).cast("long")
-            ),
-            mode="overwrite",
-        )
-        return lo, hi
 
     def estimates(self, keys: DataFrame, key_col: str) -> DataFrame:
         """Point-frequency estimates for a key frame: min over the d
@@ -1098,11 +1015,11 @@ class MaterializedTDigest:
     :class:`MaterializedSketch` (KLL), so BOTH quantile families now
     maintain incrementally (r9 verdict #8).
 
-    Protocol mirrors ``MaterializedSketch``: the applied source
-    version rides *inside* the centroid commit as ``_source_hi``, so
-    apply+advance are one atomic write and a replayed refresh is a
-    no-op. Each refresh digests ONLY the increment
-    (:func:`tdigest_centroids` over O(changes) rows —
+    Protocol: :func:`operators.matview.refresh_state` — the applied
+    source version rides *inside* the centroid commit as
+    ``_source_hi``, so apply+advance are one atomic write and a
+    replayed refresh is a no-op. Each refresh digests ONLY the
+    increment (:func:`tdigest_centroids` over O(changes) rows —
     cardinality-bounded after the first groupBy) and folds it into the
     stored centroids with Dunning's centroid merge: re-digest the
     union of ``(mean, n_c)`` weighted rows at ``value_scale=6`` —
@@ -1119,8 +1036,6 @@ class MaterializedTDigest:
     quantiles hash-match exactly (``incremental_tdigest_maintenance``).
     """
 
-    SOURCE_HI = "_source_hi"
-
     def __init__(
         self,
         spark,
@@ -1135,54 +1050,30 @@ class MaterializedTDigest:
         self.delta = delta
         self.value_scale = value_scale
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
     def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import CHANGE_TYPE, CT_INSERT
+        """Fold source versions ``(stored watermark, latest]``; returns
+        the applied ``(lo, hi)`` (lo > hi = already current)."""
 
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # ledger commit modes usually prove insert-only without a
-        # probe job (append commits emit only CT_INSERT rows)
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
-        )
-        if _ins_only is not True and (
-            changes.where(F.col(CHANGE_TYPE) != CT_INSERT).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "MaterializedTDigest is insert-only: centroids have "
-                "no delete inverse — recompute instead"
+        def fold(changes, prior):
+            inc = tdigest_centroids(
+                changes, self.value_col, delta=self.delta,
+                value_scale=self.value_scale,
             )
-        inc = tdigest_centroids(
-            changes, self.value_col, delta=self.delta,
-            value_scale=self.value_scale,
-        )
-        if self.table.exists():
-            merged = (
-                self.table.read().select("mean", "n_c")
-                .unionByName(inc.select("mean", "n_c"))
+            if prior is None:
+                return inc
+            merged = prior.select("mean", "n_c").unionByName(
+                inc.select("mean", "n_c")
             )
-            state = tdigest_centroids(
+            return tdigest_centroids(
                 merged, "mean", delta=self.delta, value_scale=6,
                 weight_col="n_c", assume_bounded=True,  # <= 2*delta rows
             )
-        else:
-            state = inc
-        self.table.write(
-            state.withColumn(self.SOURCE_HI, F.lit(hi).cast("long")),
-            mode="overwrite",
+
+        return refresh_state(
+            self.table, source, fold, accept=[CT_INSERT],
+            owner="MaterializedTDigest is insert-only (centroids have no "
+            "delete inverse; recompute instead)",
         )
-        return lo, hi
 
     def quantiles(self, probs: list[float]) -> DataFrame:
         return tdigest_quantiles(

@@ -700,6 +700,7 @@ def minhash_lsh_index_maintenance(
         jaccard,
         word_shingles,
     )
+    from .operators.matview import stored_watermark
 
     documents = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -771,7 +772,7 @@ def minhash_lsh_index_maintenance(
         .where(F.col("jaccard") >= 0.8)
     )
     return verified.withColumn(
-        "wm_next", F.lit(index.applied_hi() + 1).cast("long")
+        "wm_next", F.lit(stored_watermark(index.table) + 1).cast("long")
     )
 
 
@@ -920,8 +921,9 @@ def _fold_emit_neardup_batch(index, corpus, pairs_tbl, batch, batch_id) -> bool:
     into the LSH index, append its documents to the corpus ledger,
     then emit the batch's verified new-vs-all near-dup pairs into the
     results table — EACH of the three commits behind its own batch-id
-    watermark (the index via ``fold_batch``'s guard; corpus and pairs
-    via their own in-commit ``_source_hi``), so a crash between any
+    watermark (all three through ``matview.fold_batch_state``: the
+    index's via ``fold_batch``, corpus and pairs via their own
+    in-commit ``_source_hi``), so a crash between any
     two commits replays safely: the already-applied prefix no-ops and
     only the missing commits run (at-least-once foreachBatch →
     exactly-once tables, the r13 ``fold_stream_batch`` discipline
@@ -939,54 +941,55 @@ def _fold_emit_neardup_batch(index, corpus, pairs_tbl, batch, batch_id) -> bool:
     on the batch split — the capped variant lives in the maintained
     batch query (``minhash_lsh_index_maintenance``)."""
     from .operators.dedup import jaccard, word_shingles
-    from .operators.matview import SOURCE_HI, mapped_index_applied_hi
+    from .operators.matview import fold_batch_state
+
+    def verified_pairs(batch, _):
+        cands = index.new_vs_all_candidates(
+            batch.select("doc_id"), bucket_cap=None
+        )
+        cand_ids = (
+            cands.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
+            .distinct()
+        )
+        sh = (
+            corpus.read()
+            .join(cand_ids, "doc_id", "semi")
+            .select("doc_id", word_shingles(F.col("text"), 3).alias("_sh"))
+            .where(F.size("_sh") > 0)
+        )
+        return (
+            cands.join(
+                sh.select(
+                    F.col("doc_id").alias("doc_a"), F.col("_sh").alias("sh_a")
+                ),
+                "doc_a",
+            )
+            .join(
+                sh.select(
+                    F.col("doc_id").alias("doc_b"), F.col("_sh").alias("sh_b")
+                ),
+                "doc_b",
+            )
+            .select(
+                "doc_a",
+                "doc_b",
+                F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 4).alias(
+                    "jaccard"
+                ),
+            )
+            .where(F.col("jaccard") >= 0.8)
+        )
 
     batch = batch.select("doc_id", "text")
     folded = index.fold_batch(batch, batch_id)
-    did_work = folded
-    if mapped_index_applied_hi(corpus) < batch_id:
-        corpus.write(
-            batch.withColumn(SOURCE_HI, F.lit(batch_id).cast("long")),
-            mode="append" if corpus.exists() else "overwrite",
-        )
-        did_work = True
-    if mapped_index_applied_hi(pairs_tbl) >= batch_id:
-        return did_work
-    cands = index.new_vs_all_candidates(
-        batch.select("doc_id"), bucket_cap=None
+    appended = fold_batch_state(
+        corpus, batch, batch_id, lambda b, _: b, append=True
     )
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    emitted = fold_batch_state(
+        pairs_tbl, batch, batch_id, verified_pairs, append=True
     )
-    sh = (
-        corpus.read()
-        .join(cand_ids, "doc_id", "semi")
-        .select("doc_id", word_shingles(F.col("text"), 3).alias("_sh"))
-        .where(F.size("_sh") > 0)
-    )
-    verified = (
-        cands.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("sh_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 4).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= 0.8)
-    )
-    pairs_tbl.write(
-        verified.withColumn(SOURCE_HI, F.lit(batch_id).cast("long")),
-        mode="append" if pairs_tbl.exists() else "overwrite",
-    )
-    return True
+    return folded or appended or emitted
 
 
 @query(
@@ -1156,6 +1159,7 @@ def incremental_ivf_assign_maintenance(
     ``MaterializedIvfIndex`` an adaptive-stride or k-means centroid
     frame (√N sizing for the pair-query path); the ctor takes any
     ``(centroid_id, vec)`` DataFrame."""
+    from .operators.matview import stored_watermark
     from .operators.similarity import MaterializedIvfIndex, oracle_arrow
 
     embeddings = load_table(spark, sf_dir, "embeddings").select(
@@ -1190,7 +1194,7 @@ def incremental_ivf_assign_maintenance(
     inc_ids = src.read_changes(2, 2).select("vec_id")
     pairs = index.new_vs_all_pairs(embeddings, inc_ids, threshold=0.4)
     return pairs.withColumn(
-        "wm_next", F.lit(index.applied_hi() + 1).cast("long")
+        "wm_next", F.lit(stored_watermark(index.table) + 1).cast("long")
     )
 
 
@@ -1257,6 +1261,7 @@ def ngram_decontamination_index_maintenance(
     exactly what the oracle computes one-shot). ``wm_next`` pins the
     advanced watermark."""
     from .operators.dedup import MaterializedNgramIndex, scale_out
+    from .operators.matview import stored_watermark
     from .operators.sampling import hash_bucket
 
     L = 13
@@ -1330,7 +1335,7 @@ def ngram_decontamination_index_maintenance(
         )
     )
     return report.withColumn(
-        "wm_next", F.lit(index.applied_hi() + 1).cast("long")
+        "wm_next", F.lit(stored_watermark(index.table) + 1).cast("long")
     )
 
 
@@ -1539,7 +1544,7 @@ def streaming_decontamination_ingest(
     import uuid as _uuid
 
     from .operators.dedup import MaterializedNgramIndex, scale_out
-    from .operators.matview import SOURCE_HI, mapped_index_applied_hi
+    from .operators.matview import fold_batch_state
     from .operators.sampling import hash_bucket
     from .streaming.windows import read_events_stream, require_stream_progress
 
@@ -1565,12 +1570,7 @@ def streaming_decontamination_ingest(
     train_keys = index.read().select("key")
     results = VersionedTable(spark, f"{base}/out", write_partitions=4)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        # Idempotent-replay guard on the RESULTS ledger itself (the
-        # fold_batch pattern): the applied batch id rides inside the
-        # commit as _source_hi.
-        if batch_id <= mapped_index_applied_hi(results):
-            return
+    def report(batch: DataFrame, _) -> DataFrame:
         occ = (
             scale_out(batch.where(split == "holdout"))
             .select(
@@ -1597,7 +1597,7 @@ def streaming_decontamination_ingest(
                 .alias("key"),
             )
         )
-        report = (
+        return (
             occ.join(train_keys, "key", "left_semi")
             .groupBy(F.col("doc_id").alias("holdout_doc_id"))
             .agg(
@@ -1609,11 +1609,12 @@ def streaming_decontamination_ingest(
                     4,
                 ).alias("contaminated_frac"),
             )
-            .withColumn(SOURCE_HI, F.lit(batch_id).cast("long"))
         )
-        results.write(
-            report, mode="append" if results.exists() else "overwrite"
-        )
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        # Idempotent-replay guard on the RESULTS ledger itself: the
+        # applied batch id rides inside the commit as _source_hi.
+        fold_batch_state(results, batch, batch_id, report, append=True)
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_events_stream(
@@ -1719,6 +1720,7 @@ def lsh_index_gdpr_tombstone_maintenance(
         jaccard,
         word_shingles,
     )
+    from .operators.matview import stored_watermark
     from .operators.merge import CHANGE_TYPE, CT_DELETE
 
     documents = load_table(spark, sf_dir, "documents").select(
@@ -1788,7 +1790,7 @@ def lsh_index_gdpr_tombstone_maintenance(
         .where(F.col("jaccard") >= 0.8)
     )
     return verified.withColumn(
-        "wm_next", F.lit(index.applied_hi() + 1).cast("long")
+        "wm_next", F.lit(stored_watermark(index.table) + 1).cast("long")
     )
 
 
@@ -2190,7 +2192,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes the aggregate from the net final state; the
     incremental path must land on exactly the same decimal sums.
     """
-    from .operators.matview import COUNT_COL, SOURCE_HI, MaterializedAggregate
+    from .operators.matview import COUNT_COL, MaterializedAggregate
     from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
     orders = load_table(spark, sf_dir, "orders").select(*_ORDER_COLS)
@@ -2833,7 +2835,7 @@ def incremental_lm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     generators, not just joins/projections. v0 creates the corpus
     minus ≡3 (mod 4); a merge then deletes ≡1 (mod 8) and inserts
     ≡3 (mod 4); one refresh folds each commit's increment."""
-    from .operators.matview import COUNT_COL, SOURCE_HI, MaterializedAggregate
+    from .operators.matview import COUNT_COL, MaterializedAggregate
     from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3362,6 +3364,7 @@ def incremental_distinct_maintenance(
     Scale: refresh cost is O(|increment|) + a k-row merge — the
     distinct-count feed stays current without rescanning the fact
     table."""
+    from .operators.matview import stored_watermark
     from .operators.sketch import MaterializedThetaSketch
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -3394,7 +3397,7 @@ def incremental_distinct_maintenance(
             F.count_distinct("o_custkey").alias("exact_distinct")
         )
         wm = spark.range(1).select(
-            F.lit(sketch.applied_hi() + 1).cast("long").alias("wm_next")
+            F.lit(stored_watermark(sketch.table) + 1).cast("long").alias("wm_next")
         )
         return (
             sketch.stats()
@@ -3453,6 +3456,7 @@ def incremental_frequency_maintenance(
     watermark. Scale: refresh is O(|changes| × depth) fixed-width
     rows merged into a (depth × width)-bounded grid — the frequency
     feed never rescans the fact table."""
+    from .operators.matview import stored_watermark
     from .operators.merge import CHANGE_TYPE, CT_DELETE
     from .operators.sketch import MaterializedCountMin
 
@@ -3501,7 +3505,7 @@ def incremental_frequency_maintenance(
         return (
             est.join(truth, "o_orderpriority")
             .withColumn(
-                "wm_next", F.lit(mcm.applied_hi() + 1).cast("long")
+                "wm_next", F.lit(stored_watermark(mcm.table) + 1).cast("long")
             )
         )
     finally:

@@ -2985,6 +2985,36 @@ def test_lsh_index_fold_batch_idempotent_and_oneshot_equal(spark, tmp_path):
     assert maintained == oneshot
 
 
+def test_lsh_index_fold_batch_on_tombstone_index(spark, tmp_path):
+    """fold_batch on a deletes="tombstone" index commits the tombstone
+    column and the watermark marker like a refresh does (it once
+    appended rows without ``_tomb`` and failed the ledger's schema
+    check); the batch's documents read back next to the refreshed
+    ones and the batch id becomes the stored watermark."""
+    from data_seedling_spark.operators.dedup import MaterializedLshIndex
+    from data_seedling_spark.operators.ledger import VersionedTable
+    from data_seedling_spark.operators.matview import stored_watermark
+
+    docs = spark.createDataFrame(_neardup_corpus(), ["doc_id", "text"])
+    src = VersionedTable(spark, str(tmp_path / "src"), write_partitions=2)
+    idx = MaterializedLshIndex(
+        spark, VersionedTable(spark, str(tmp_path / "idx"), write_partitions=2),
+        text_col="text", id_col="doc_id", deletes="tombstone",
+    )
+    src.write(docs.where(F.col("doc_id") % 2 == 0), mode="overwrite")
+    assert idx.refresh(src) == (0, 0)
+    assert idx.fold_batch(docs.where(F.col("doc_id") % 2 == 1), 5) is True
+    assert stored_watermark(idx.table) == 5
+    maintained = {
+        (r["doc_id"], r["band"], r["bkey"]) for r in idx.read().collect()
+    }
+    oneshot = {
+        (r["doc_id"], r["band"], r["bkey"])
+        for r in idx.band_rows(docs).collect()
+    }
+    assert maintained == oneshot
+
+
 def test_lsh_index_multi_commit_net_effect(spark, tmp_path):
     """One refresh spanning several commits applies each id's NET
     effect: a doc inserted in v1 and deleted in v2 must NOT be
@@ -3100,7 +3130,7 @@ def test_ivf_index_maintained_equals_oneshot_and_new_vs_all(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Tombstone delete path + watermark marker (r14, VERDICT r13 #3 / ADVICE r13):
 # O(changes) delete folding with read-time last-writer-wins resolution,
-# threshold compaction, and the applied_hi == returned-hi contract.
+# threshold compaction, and the stored watermark == returned-hi contract.
 # ---------------------------------------------------------------------------
 
 
@@ -3197,7 +3227,7 @@ def test_mapped_index_compaction_preserves_content_and_watermark(spark, tmp_path
     from data_seedling_spark.operators.ledger import VersionedTable
     from data_seedling_spark.operators.matview import (
         compact_mapped_index,
-        mapped_index_applied_hi,
+        stored_watermark,
     )
     from data_seedling_spark.operators.merge import CHANGE_TYPE, CT_DELETE
 
@@ -3219,7 +3249,7 @@ def test_mapped_index_compaction_preserves_content_and_watermark(spark, tmp_path
     assert compact_mapped_index(idx.table, "doc_id", min_stale_fraction=0.05)
     after = {(r["doc_id"], r["band"], r["bkey"]) for r in idx.read().collect()}
     assert after == before
-    assert mapped_index_applied_hi(idx.table) == 1
+    assert stored_watermark(idx.table) == 1
     assert idx.table.read().count() < raw_before
     # already compact: below the stale threshold, no rewrite
     assert not compact_mapped_index(idx.table, "doc_id", min_stale_fraction=0.05)
@@ -3279,10 +3309,11 @@ def test_mapped_index_compaction_tag_skips_resolution_window(spark, tmp_path):
 def test_mapped_index_zero_row_increment_advances_watermark(spark, tmp_path):
     """ADVICE r13: an increment whose docs all band to ZERO index rows
     (empty texts -> no shingles) must still advance the stored
-    watermark — applied_hi() equals the hi the refresh returned, in
-    both delete modes."""
+    watermark — stored_watermark() equals the hi the refresh returned,
+    in both delete modes."""
     from data_seedling_spark.operators.dedup import MaterializedLshIndex
     from data_seedling_spark.operators.ledger import VersionedTable
+    from data_seedling_spark.operators.matview import stored_watermark
 
     for mode in ("rewrite", "tombstone"):
         src = VersionedTable(
@@ -3302,7 +3333,7 @@ def test_mapped_index_zero_row_increment_advances_watermark(spark, tmp_path):
         empties = spark.createDataFrame([(2, ""), (3, " ")], ["doc_id", "text"])
         src.write(empties, mode="append")                              # v1
         assert idx.refresh(src) == (1, 1)
-        assert idx.applied_hi() == 1, mode
+        assert stored_watermark(idx.table) == 1, mode
         # the marker is invisible to consumers; the next refresh is a
         # genuine no-op rather than a refold of v1
         assert {r["doc_id"] for r in idx.read().collect()} == {1}
@@ -3440,6 +3471,7 @@ def test_ngram_index_maintained_equals_oneshot(spark, tmp_path):
     zero rows without stalling the watermark."""
     from data_seedling_spark.operators.dedup import MaterializedNgramIndex
     from data_seedling_spark.operators.ledger import VersionedTable
+    from data_seedling_spark.operators.matview import stored_watermark
     from data_seedling_spark.operators.merge import CHANGE_TYPE, CT_DELETE
 
     body = ("the quick brown fox jumps over the lazy dog while counting "
@@ -3467,7 +3499,7 @@ def test_ngram_index_maintained_equals_oneshot(spark, tmp_path):
     assert idx.refresh(src) == (2, 2)
     lo, hi = idx.refresh(src)
     assert lo > hi, "replayed refresh must be a no-op"
-    assert idx.applied_hi() == 2
+    assert stored_watermark(idx.table) == 2
     maintained = {(r["doc_id"], r["key"]) for r in idx.read().collect()}
     oneshot = {
         (r["doc_id"], r["key"])

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -209,3 +210,183 @@ def test_stream_aggregate_into_matches_batch_and_guards_replay(spark, tmp_path):
         for r in view.table.read().collect()
     }
     assert got2 == expected
+
+
+# ---------------------------------------------------------------------------
+# The shared exactly-once protocol (matview.refresh_state and its
+# row-mapped-index form) across every CDC-maintained state family.
+# ---------------------------------------------------------------------------
+
+
+def _family_state(spark, family, table):
+    from data_seedling_spark.operators.dedup import (
+        MaterializedLshIndex,
+        MaterializedNgramIndex,
+    )
+    from data_seedling_spark.operators.similarity import MaterializedIvfIndex
+    from data_seedling_spark.operators.sketch import (
+        MaterializedCountMin,
+        MaterializedSketch,
+        MaterializedTDigest,
+        MaterializedThetaSketch,
+    )
+
+    if family == "aggregate":
+        return MaterializedAggregate(spark, table, ["grp"], {"revenue": "amount"})
+    if family == "kll":
+        return MaterializedSketch(
+            spark, table, "amount", "id", inc_rounds=2, merge_rounds=1,
+            bucket_width=50.0,
+        )
+    if family == "theta":
+        return MaterializedThetaSketch(spark, table, "grp", k=8)
+    if family == "count_min":
+        return MaterializedCountMin(spark, table, "grp", depth=2, width=16)
+    if family == "tdigest":
+        return MaterializedTDigest(spark, table, "amount", delta=10)
+    if family == "lsh":
+        return MaterializedLshIndex(spark, table, "text", "id")
+    if family == "ngram":
+        return MaterializedNgramIndex(spark, table, "text", "id", n=3)
+    centroids = spark.createDataFrame(
+        [(0, [0.0, 0.0, 1.0]), (1, [4.0, 2.0, 1.0])],
+        "centroid_id long, embedding array<double>",
+    )
+    return MaterializedIvfIndex(spark, table, centroids, "id", "embedding")
+
+
+def _family_rows(spark, ids):
+    return spark.createDataFrame(
+        [
+            (
+                i,
+                f"g{i % 4}",
+                float(i * 7 % 97),
+                f"document {i} says alpha beta gamma {i % 3}",
+                [float(i % 5), float(i % 3), 1.0],
+            )
+            for i in ids
+        ],
+        "id long, grp string, amount double, text string, "
+        "embedding array<double>",
+    )
+
+
+class _MetadataHidden:
+    """The same source without the ledger metadata that proves a range
+    insert-only, so the refresh has to probe the change rows. The change
+    type becomes a data-dependent (identity) expression: an append
+    commit's literal type would let the optimizer answer the probe
+    without running a job."""
+
+    def __init__(self, source):
+        self.source = source
+
+    def latest_version(self):
+        return self.source.latest_version()
+
+    def read_changes(self, lo, hi):
+        changes = self.source.read_changes(lo, hi)
+        return changes.withColumn(
+            CHANGE_TYPE, F.when(F.col("id") >= 0, F.col(CHANGE_TYPE))
+        )
+
+
+def _jobs_run(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: family → whether its refresh probes the change rows when the ledger
+#: metadata cannot decide (the change-type guard, or the mapped
+#: indexes' insert-only path choice); the aggregate folds every type.
+STATE_FAMILIES = {
+    "aggregate": False,
+    "kll": True,
+    "theta": True,
+    "count_min": True,
+    "tdigest": True,
+    "lsh": True,
+    "ngram": True,
+    "ivf": True,
+}
+
+
+@pytest.mark.parametrize("family", sorted(STATE_FAMILIES))
+def test_state_family_replays_noop_and_skips_probe_on_appends(
+    spark, tmp_path, family
+):
+    """Every CDC-maintained state family, through the shared protocol:
+    the stored watermark equals the returned ``hi``, a replayed refresh
+    returns ``lo > hi`` without a commit, and an append-only range runs
+    no probe job — the same refresh over a source whose metadata is
+    hidden runs more jobs exactly when the family probes."""
+    from data_seedling_spark.operators.matview import stored_watermark
+
+    runs = {}
+    for side in ("plain", "probed"):
+        src = VersionedTable(spark, str(tmp_path / f"src_{side}"), write_partitions=1)
+        state = _family_state(
+            spark, family,
+            VersionedTable(spark, str(tmp_path / f"st_{side}"), write_partitions=1),
+        )
+        src.write(_family_rows(spark, range(0, 24)), mode="overwrite")
+        assert state.refresh(src) == (0, 0)
+        assert stored_watermark(state.table) == 0
+        runs[side] = (src, state)
+
+    src, state = runs["plain"]
+    version = state.table.latest_version()
+    lo, hi = state.refresh(src)
+    assert lo > hi
+    assert state.table.latest_version() == version  # no commit
+
+    jobs = {}
+    for side, (src, state) in runs.items():
+        src.write(_family_rows(spark, range(24, 40)), mode="append")
+        source = src if side == "plain" else _MetadataHidden(src)
+        out, jobs[side] = _jobs_run(
+            spark, f"state_{family}_{side}", lambda: state.refresh(source)
+        )
+        assert out == (1, 1)
+        assert stored_watermark(state.table) == 1
+    if STATE_FAMILIES[family]:
+        assert jobs["probed"] > jobs["plain"], jobs
+    else:
+        assert jobs["probed"] == jobs["plain"], jobs
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="the watermark rides in the data rows, so a fold whose state "
+    "comes out empty commits no row carrying it",
+)
+def test_empty_folded_state_keeps_its_watermark(spark, tmp_path):
+    """Deleting every source row folds the count-min grid (and an
+    aggregate view) to an empty state; the refresh returns (1, 1), but
+    the empty commit holds no ``_source_hi`` row, so the stored
+    watermark falls back to -1 and the next refresh re-folds (0, 1)."""
+    from data_seedling_spark.operators.matview import stored_watermark
+    from data_seedling_spark.operators.sketch import MaterializedCountMin
+
+    rows = _family_rows(spark, range(12))
+    src = VersionedTable(spark, str(tmp_path / "src"), write_partitions=1)
+    mcm = MaterializedCountMin(
+        spark,
+        VersionedTable(spark, str(tmp_path / "cm"), write_partitions=1),
+        key_col="grp",
+        depth=2,
+        width=16,
+    )
+    src.write(rows, mode="overwrite")
+    assert mcm.refresh(src) == (0, 0)
+    src.merge(rows.withColumn(CHANGE_TYPE, F.lit(CT_DELETE)), primary_keys=["id"])
+    assert mcm.refresh(src) == (1, 1)
+    assert mcm.table.read().count() == 0
+    assert stored_watermark(mcm.table) == 1
